@@ -40,6 +40,18 @@ UPSERT_BATCH_CAP = 1000  # reference stub.py:453
 DELETE_LIMIT_RANGE = (1, 16384)  # reference stub.py:484
 
 
+def _hit_lists(rows, n_queries: int) -> list[list[dict]]:
+    """Group ``(query_idx, rank, ...)`` result rows into one hit-list per
+    query, each in rank order, with both keys dropped."""
+    out: list[list[dict]] = [[] for _ in range(n_queries)]
+    for r in sorted(rows, key=lambda r: (r["query_idx"], r["rank"])):
+        d = r.asDict(recursive=True)
+        qi = d.pop("query_idx")
+        d.pop("rank")
+        out[qi].append(d)
+    return out
+
+
 class VectorDBEngine:
     def __init__(
         self,
@@ -812,13 +824,7 @@ class VectorDBEngine:
         """Op 28: returns one hit-list per query vector
         (wire shape reference collection.py:698-707)."""
         res = self.search_df(database, collection, vectors, **kw).collect()
-        out: list[list[dict]] = [[] for _ in vectors]
-        for r in sorted(res, key=lambda r: (r["query_idx"], r["rank"])):
-            d = r.asDict(recursive=True)
-            d.pop("query_idx")
-            d.pop("rank")
-            out[r["query_idx"]].append(d)
-        return out
+        return _hit_lists(res, len(vectors))
 
     def search_by_id(
         self, database: str, collection: str, document_ids: Sequence, **kw
@@ -838,13 +844,7 @@ class VectorDBEngine:
             ),
             **kw,
         ).collect()
-        out: list[list[dict]] = [[] for _ in document_ids]
-        for r in sorted(res, key=lambda r: (r["query_idx"], r["rank"])):
-            d = r.asDict(recursive=True)
-            d.pop("query_idx")
-            d.pop("rank")
-            out[r["query_idx"]].append(d)
-        return out
+        return _hit_lists(res, len(document_ids))
 
     def search_by_text(
         self, database: str, collection: str, texts: Sequence[str], **kw
@@ -932,14 +932,7 @@ class VectorDBEngine:
             filter=translate_filter(filter) if filter else None,
             **kw,
         )
-        res = out_df.collect()
-        nq = len(ann_vectors) if ann_vectors else 1
-        out: list[list[dict]] = [[] for _ in range(nq)]
-        for r in sorted(res, key=lambda r: (r["query_idx"], r["rank"])):
-            d = r.asDict(recursive=True)
-            qi = d.pop("query_idx")
-            d.pop("rank")
-            out[qi].append(d)
+        out = _hit_lists(out_df.collect(), len(ann_vectors) if ann_vectors else 1)
         return out[0] if single_in else out
 
 

@@ -155,9 +155,7 @@ def _mark_frozen_stars(edges: DataFrame) -> DataFrame:
     oriented — the degree-local star test double-counts degrees on
     duplicate edges and would silently sever non-star components.
     The only caller feeds ``_small_star(...)`` output, whose trailing
-    ``.distinct()`` guarantees this; set
-    ``AIOTCVDB_CHECK_DISTINCT_EDGES=1`` to assert it at runtime (one
-    extra aggregate per round — debug only).
+    ``.distinct()`` guarantees this (pinned in tests/test_components.py).
 
     Star test, all degree-local: root b has out-degree 0, and EVERY
     in-neighbor a of b has out-degree 1 and in-degree 0. When it holds,
@@ -170,17 +168,6 @@ def _mark_frozen_stars(edges: DataFrame) -> DataFrame:
     and a window would sort that entire hot key in one task (observed
     Java-heap OOM at the 100x probe), while groupBy-min partial-
     aggregates it map-side to one row per task."""
-    import os as _os
-
-    if _os.environ.get("AIOTCVDB_CHECK_DISTINCT_EDGES") == "1":
-        dup = (
-            edges.groupBy("a", "b").count().where(F.col("count") > 1).count()
-        )
-        if dup:
-            raise AssertionError(
-                f"_mark_frozen_stars fed {dup} duplicate edges — the "
-                "degree-local star test requires a distinct edge list"
-            )
     deg = (
         edges.select(F.col("a").alias("n"), F.lit(1).alias("o"), F.lit(0).alias("i"))
         .union(edges.select(F.col("b"), F.lit(0), F.lit(1)))

@@ -572,7 +572,7 @@ def pii_scrub_stage(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Redact emails / IPv4 addresses / international phone numbers IN
     PLACE on ``text_col`` before any downstream stage sees the text
     (same patterns as the oracle-checked ``pii_scrub`` registry query)."""
-    from aiotcvectordb_spark.queries import _PII_EMAIL, _PII_IPV4, _PII_PHONE
+    from aiotcvectordb_spark.qfam.curation import _PII_EMAIL, _PII_IPV4, _PII_PHONE
 
     scrubbed = F.regexp_replace(
         F.regexp_replace(

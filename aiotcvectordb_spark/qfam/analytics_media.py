@@ -2,9 +2,38 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
-from aiotcvectordb_spark.qfam.vector import FLAGSHIP_VECTORS, _N_BIN_BYTES, _bin_byte_sql, _binarize_py, _binarize_spark_expr  # noqa: F401
-from aiotcvectordb_spark.qfam.textdedup import ORACLE_MINHASH_SIGNATURES, _N_MINHASH, _assign_fixed_cells, _portable_hash_expr, q_minhash_signatures  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.operators import knn
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.payloadstore import payload_table
+from aiotcvectordb_spark.qfam.core import (
+    DIM,
+    ROUND_DIGITS,
+    _BM25_TOKS_SQL,
+    _COS_SQL,
+    _INCR_SPLIT,
+    _sql_queries_cte,
+    _sql_vec,
+    load,
+    load_wide,
+    qvec,
+)
+from aiotcvectordb_spark.qfam.vector import (
+    FLAGSHIP_VECTORS,
+    _N_BIN_BYTES,
+    _bin_byte_sql,
+    _binarize_py,
+    _binarize_spark_expr,
+)
+from aiotcvectordb_spark.qfam.textdedup import (
+    ORACLE_MINHASH_SIGNATURES,
+    _N_MINHASH,
+    _assign_fixed_cells,
+    _portable_hash_expr,
+    q_minhash_signatures,
+)
 
 # --------------------------------------------------------------------------
 # Embedding-space extras: MMR diversified rerank, PCA reduction
@@ -2751,107 +2780,3 @@ SELECT event_id, user_id,
              / (1.0 - power({1.0 - _EWMA_ALPHA!r}, len(vals))), 6) AS ewma
 FROM w
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "q_mmr_rerank",
-    "ORACLE_MMR_RERANK",
-    "q_embedding_pca",
-    "q_embedding_pca_fixed",
-    "_pca_fixed_oracle",
-    "ORACLE_EMBEDDING_PCA_FIXED",
-    "q_audio_probe",
-    "q_audio_adpcm_probe",
-    "ORACLE_AUDIO_PROBE",
-    "_MPNG_FRAMES",
-    "_MPNG_WIDTH",
-    "_MPNG_STRIDE",
-    "q_video_frames",
-    "ORACLE_VIDEO_FRAMES",
-    "q_video_mjpeg_meta",
-    "ORACLE_VIDEO_MJPEG_META",
-    "q_video_mjpeg_frames",
-    "ORACLE_VIDEO_MJPEG_FRAMES",
-    "q_gif_frames",
-    "ORACLE_GIF_FRAMES",
-    "q_ann_bq_cosine",
-    "ORACLE_ANN_BQ_COSINE",
-    "q_ann_sq8_cosine",
-    "_sq8_queries_cte",
-    "ORACLE_ANN_SQ8_COSINE",
-    "_IVF_FIXED_NLIST",
-    "_IVF_FIXED_NPROBE",
-    "_IVF_FIXED_CENTROIDS",
-    "q_ann_ivf_cosine_fixed",
-    "_ivf_fixed_cents_sql",
-    "_duck_cos",
-    "ORACLE_ANN_IVF_COSINE_FIXED",
-    "_PQ_FIXED_OVERSAMPLE",
-    "q_ann_pq_cosine_fixed",
-    "_pq_fixed_oracle",
-    "ORACLE_ANN_PQ_COSINE_FIXED",
-    "q_label_centroids",
-    "ORACLE_LABEL_CENTROIDS",
-    "q_embedding_outliers",
-    "ORACLE_EMBEDDING_OUTLIERS",
-    "q_rolling_active_users",
-    "ORACLE_ROLLING_ACTIVE_USERS",
-    "q_attribution_last_touch",
-    "ORACLE_ATTRIBUTION_LAST_TOUCH",
-    "q_equidepth_histogram",
-    "ORACLE_EQUIDEPTH_HISTOGRAM",
-    "q_lang_top_terms",
-    "ORACLE_LANG_TOP_TERMS",
-    "_PROFILE_NUM_COLS",
-    "_PROFILE_STR_COLS",
-    "q_profile_table",
-    "_profile_oracle_leg",
-    "ORACLE_PROFILE_TABLE",
-    "q_incremental_dedup",
-    "ORACLE_INCREMENTAL_DEDUP",
-    "_SOURCE_QUOTA",
-    "q_source_quota",
-    "ORACLE_SOURCE_QUOTA",
-    "q_unigram_logprob",
-    "q_c4_quality_filter",
-    "_C4_KEPT_SQL",
-    "ORACLE_C4_QUALITY_FILTER",
-    "_top_gram_expr",
-    "_dup_seg_flag_exprs",
-    "_seg_chars_expr",
-    "_GOPHER_TOP_NGRAM_RULES",
-    "q_gopher_quality_filter",
-    "_oracle_top_ngram_ctes",
-    "ORACLE_GOPHER_QUALITY_FILTER",
-    "_DSIR_BUCKETS",
-    "_DSIR_KEEP",
-    "q_dsir_weights",
-    "ORACLE_DSIR_WEIGHTS",
-    "q_quality_classifier",
-    "q_quality_classifier_frozen",
-    "_classifier_frozen_oracle",
-    "ORACLE_QUALITY_CLASSIFIER_FROZEN",
-    "q_perplexity_filter",
-    "ORACLE_PERPLEXITY_FILTER",
-    "q_bigram_logprob",
-    "ORACLE_BIGRAM_LOGPROB",
-    "ORACLE_UNIGRAM_LOGPROB",
-    "_N_SHARDS",
-    "q_training_shards",
-    "ORACLE_TRAINING_SHARDS",
-    "_PACK_LEN",
-    "q_pack_sequences",
-    "ORACLE_PACK_SEQUENCES",
-    "_PACK_BUCKETS",
-    "q_pack_sequences_nosplit",
-    "ORACLE_PACK_SEQUENCES_NOSPLIT",
-    "_EWMA_ALPHA",
-    "_EWMA_SPAN",
-    "q_ewma_smooth",
-    "ORACLE_EWMA_SMOOTH",
-]

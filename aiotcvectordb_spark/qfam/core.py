@@ -1,4 +1,4 @@
-"""Shared query-registry core (r12 split): imports, load()/cache, constants.
+"""Shared query-registry core: load()/cache, constants, oracle SQL helpers.
 
 Every entry corresponds to an operator from SURVEY.md §2 (or a
 north-star LLM-pipeline extension). Each Spark callable takes
@@ -14,20 +14,11 @@ differences can't flip rows in or out of a result.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from aiotcvectordb_spark.engine import (
-    delete_rows,
-    update_dataframe,
-    upsert_dataframes,
-)
-from aiotcvectordb_spark.operators import fulltext, hybrid, knn
 from aiotcvectordb_spark.functions import sparse as sparse_fn
 from aiotcvectordb_spark.partitioning import ensure_min_partitions
-from aiotcvectordb_spark.payloadstore import payload_table
 
 ROUND_DIGITS = 6
 DIM = 64
@@ -186,45 +177,3 @@ FROM {radius_sql and "filtered" or "scored"}
 QUALIFY rank <= {limit}
 ORDER BY query_idx, rank
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "annotations",
-    "math",
-    "Callable",
-    "DataFrame",
-    "SparkSession",
-    "Window",
-    "F",
-    "delete_rows",
-    "update_dataframe",
-    "upsert_dataframes",
-    "fulltext",
-    "hybrid",
-    "knn",
-    "sparse_fn",
-    "ensure_min_partitions",
-    "payload_table",
-    "ROUND_DIGITS",
-    "DIM",
-    "_INCR_SPLIT",
-    "_LOAD_CACHE",
-    "load",
-    "load_wide",
-    "qvec",
-    "_sql_vec",
-    "_sql_queries_cte",
-    "_COS_SQL",
-    "_IP_SQL",
-    "_L2_SQL",
-    "_TOKS_SQL",
-    "_duck_bm25_toks_sql",
-    "_BM25_TOKS_SQL",
-    "_WORDCHAR_CLASS",
-    "_knn_oracle",
-]

@@ -2,8 +2,25 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
-from aiotcvectordb_spark.qfam.textdedup import _oracle_mh_windows, _portable_hash_expr, q_semantic_dedup, q_semantic_dedup_auto  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.partitioning import ensure_min_partitions
+from aiotcvectordb_spark.qfam.core import (
+    ROUND_DIGITS,
+    _BM25_TOKS_SQL,
+    _WORDCHAR_CLASS,
+    _duck_bm25_toks_sql,
+    load,
+    load_wide,
+)
+from aiotcvectordb_spark.qfam.textdedup import (
+    _oracle_mh_windows,
+    _portable_hash_expr,
+    q_semantic_dedup,
+    q_semantic_dedup_auto,
+)
 
 # --------------------------------------------------------------------------
 # North-star: training-data preparation (clean / split / sample)
@@ -2229,93 +2246,3 @@ WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) >
                      / count(*))
        FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "_PII_EMAIL",
-    "_PII_IPV4",
-    "_PII_PHONE",
-    "q_pii_scrub",
-    "ORACLE_PII_SCRUB",
-    "q_benchmark_decontaminate",
-    "ORACLE_BENCHMARK_DECONTAMINATE",
-    "q_decontaminate_fraction",
-    "ORACLE_DECONTAMINATE_FRACTION",
-    "q_incremental_decontaminate_fraction",
-    "ORACLE_INCREMENTAL_DECONTAMINATE_FRACTION",
-    "_SUBSTR_DEDUP_N",
-    "_CURATE_H60",
-    "q_gram_novelty",
-    "ORACLE_GRAM_NOVELTY",
-    "q_incremental_gram_novelty",
-    "ORACLE_INCREMENTAL_GRAM_NOVELTY",
-    "q_clean_text",
-    "_MIX_WEIGHTS",
-    "_MIX_BUDGET_FRAC",
-    "_MIX_SALTS",
-    "_mix_select",
-    "q_dataset_mix",
-    "_MIX_TEMPERATURE",
-    "_temp_weights",
-    "q_dataset_mix_temp",
-    "_mix_oracle_sql",
-    "ORACLE_DATASET_MIX",
-    "ORACLE_DATASET_MIX_TEMP",
-    "q_substring_dedup",
-    "ORACLE_SUBSTRING_DEDUP",
-    "_word_ngrams",
-    "q_substring_dedup_hashed",
-    "q_substring_dedup_hashed_portable",
-    "ORACLE_SUBSTRING_DEDUP_HASHED_PORTABLE",
-    "_CJK_SRC",
-    "_CJK_DST",
-    "_SUBSTR_CJK_CHAR_N",
-    "q_substring_dedup_cjk",
-    "q_substring_dedup_cjk_hashed",
-    "ORACLE_SUBSTRING_DEDUP_CJK_HASHED",
-    "q_incremental_substring_dedup_cjk",
-    "ORACLE_INCREMENTAL_SUBSTRING_DEDUP_CJK",
-    "ORACLE_SUBSTRING_DEDUP_CJK",
-    "q_incremental_substring_dedup",
-    "ORACLE_INCREMENTAL_SUBSTRING_DEDUP",
-    "_BOILER_HEADERS",
-    "_BOILER_FOOTERS",
-    "_LINE_DEDUP_MIN_COUNT",
-    "_boiler_pages",
-    "q_line_dedup",
-    "_LD_HDRS",
-    "_LD_FTRS",
-    "ORACLE_LINE_DEDUP",
-    "q_incremental_line_dedup",
-    "ORACLE_INCREMENTAL_LINE_DEDUP",
-    "ORACLE_CLEAN_TEXT",
-    "q_dataset_split",
-    "ORACLE_DATASET_SPLIT",
-    "q_curate_corpus",
-    "_CURATE_CLEAN_SQL",
-    "_CURATE_TOKS_SQL",
-    "ORACLE_CURATE_CORPUS",
-    "_V2_GATE_FLAGS",
-    "q_curate_corpus_v2",
-    "q_curate_corpus_v2_auto",
-    "q_stratified_sample",
-    "_STRAT_RATES",
-    "q_stratified_sample_hash",
-    "ORACLE_STRATIFIED_SAMPLE_HASH",
-    "_WEIGHTED_SAMPLE_K",
-    "q_weighted_sample_hash",
-    "ORACLE_WEIGHTED_SAMPLE_HASH",
-    "_WINNOW_K",
-    "_WINNOW_W",
-    "q_winnow_fingerprint",
-    "_winnow_selection",
-    "ORACLE_WINNOW_FINGERPRINT",
-    "q_token_entropy",
-    "ORACLE_TOKEN_ENTROPY",
-    "ORACLE_CORRELATED_SUBQUERY",
-]

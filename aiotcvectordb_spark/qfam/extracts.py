@@ -2,8 +2,23 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
-from aiotcvectordb_spark.qfam.vector import FLAGSHIP_VECTORS  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.operators import knn
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.payloadstore import payload_table
+from aiotcvectordb_spark.qfam.core import (
+    DIM,
+    ROUND_DIGITS,
+    _L2_SQL,
+    _sql_queries_cte,
+    _sql_vec,
+    load,
+    load_wide,
+    qvec,
+)
+from aiotcvectordb_spark.qfam.vector import FLAGSHIP_VECTORS
 
 # --------------------------------------------------------------------------
 # Rows-only queries (no SQL oracle: embedding model / MLlib approx index)
@@ -1432,63 +1447,3 @@ SELECT query_idx, vec_id, score, CAST(rank AS INT) AS rank FROM (
 
 
 ORACLE_ANN_LSH_L2_FIXED = _lsh_fixed_oracle()
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "q_bpe_token_count",
-    "_BPE_FROZEN_MERGES",
-    "q_bpe_token_count_frozen",
-    "_bpe_frozen_oracle",
-    "ORACLE_BPE_TOKEN_COUNT_FROZEN",
-    "q_approx_sketches",
-    "_MMF_WIDTH",
-    "q_multimodal_features",
-    "ORACLE_MULTIMODAL_FEATURES",
-    "q_audio_mp3_probe",
-    "q_audio_mp3_meta",
-    "ORACLE_AUDIO_MP3_META",
-    "q_jpeg_meta",
-    "ORACLE_JPEG_META",
-    "q_audio_adpcm_meta",
-    "ORACLE_AUDIO_ADPCM_META",
-    "_PDF_LINES_PER_PAGE",
-    "q_pdf_extract",
-    "ORACLE_PDF_EXTRACT",
-    "q_doc_extract",
-    "ORACLE_DOC_EXTRACT",
-    "q_ppt_extract",
-    "ORACLE_PPT_EXTRACT",
-    "q_xls_extract",
-    "ORACLE_XLS_EXTRACT",
-    "q_docx_extract",
-    "ORACLE_DOCX_EXTRACT",
-    "q_pptx_extract",
-    "ORACLE_PPTX_EXTRACT",
-    "q_xlsx_extract",
-    "ORACLE_XLSX_EXTRACT",
-    "q_rtf_extract",
-    "ORACLE_RTF_EXTRACT",
-    "q_epub_extract",
-    "ORACLE_EPUB_EXTRACT",
-    "q_ann_pq_cosine",
-    "_SBT_QUERY_TEXT",
-    "_hash_embed_feats",
-    "_sbt_tokens_sql",
-    "_hash_embed_sparse",
-    "q_search_by_text",
-    "_sbt_duck_tokens_sql",
-    "_sbt_embed_cte",
-    "ORACLE_SEARCH_BY_TEXT",
-    "q_ann_ivf_cosine",
-    "q_ann_ivf_fullprobe",
-    "q_ann_pq_fullrescore",
-    "q_ann_lsh_l2",
-    "q_ann_lsh_l2_fixed",
-    "_lsh_fixed_oracle",
-    "ORACLE_ANN_LSH_L2_FIXED",
-]

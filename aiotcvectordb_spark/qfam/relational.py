@@ -2,7 +2,11 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.payloadstore import payload_table
+from aiotcvectordb_spark.qfam.core import ROUND_DIGITS, load, load_wide
 
 # --------------------------------------------------------------------------
 # Relational coverage (SURVEY §2.7): joins, windows, rollup, set ops.
@@ -727,50 +731,3 @@ SELECT doc_id,
          AS px_mean
 FROM dims
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "q_join_pruned_dims",
-    "ORACLE_JOIN_PRUNED_DIMS",
-    "q_window_running",
-    "ORACLE_WINDOW_RUNNING",
-    "q_rollup_agg",
-    "ORACLE_ROLLUP_AGG",
-    "q_window_funcs",
-    "ORACLE_WINDOW_FUNCS",
-    "q_scalar_funcs",
-    "ORACLE_SCALAR_FUNCS",
-    "q_cube_agg",
-    "ORACLE_CUBE_AGG",
-    "q_percentiles",
-    "ORACLE_PERCENTILES",
-    "q_semi_anti_join",
-    "ORACLE_SEMI_ANTI_JOIN",
-    "q_set_ops",
-    "ORACLE_SET_OPS",
-    "q_event_window_agg",
-    "q_price_histogram",
-    "ORACLE_PRICE_HISTOGRAM",
-    "q_sliding_window_agg",
-    "ORACLE_SLIDING_WINDOW_AGG",
-    "q_asof_join",
-    "ORACLE_ASOF_JOIN",
-    "q_interval_join",
-    "ORACLE_INTERVAL_JOIN",
-    "q_sessionize",
-    "q_sessionize_udtf",
-    "ORACLE_SESSIONIZE",
-    "ORACLE_EVENT_WINDOW_AGG",
-    "q_multimodal_meta",
-    "ORACLE_MULTIMODAL_META",
-    "q_image_probe",
-    "ORACLE_IMAGE_PROBE",
-    "q_jpeg_probe",
-    "q_jpeg_progressive_probe",
-    "ORACLE_JPEG_PROBE",
-]

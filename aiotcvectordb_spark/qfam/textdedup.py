@@ -2,8 +2,26 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
-from aiotcvectordb_spark.qfam.vector import _FT_QUERY, _HYBRID_VEC, _bm25_oracle_cte, sparse_index  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.operators import hybrid
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.partitioning import ensure_min_partitions
+from aiotcvectordb_spark.qfam.core import (
+    DIM,
+    ROUND_DIGITS,
+    _BM25_TOKS_SQL,
+    _INCR_SPLIT,
+    _TOKS_SQL,
+    _WORDCHAR_CLASS,
+    _sql_queries_cte,
+    _sql_vec,
+    load,
+    load_wide,
+    qvec,
+)
+from aiotcvectordb_spark.qfam.vector import _FT_QUERY, _HYBRID_VEC, _bm25_oracle_cte, sparse_index
 
 # --------------------------------------------------------------------------
 # North-star: dedup / text analysis (documents table)
@@ -1894,101 +1912,3 @@ FROM chunks c JOIN hits h
   ON c.doc_id = h.h_doc AND abs(c.chunk_pos - h.h_pos) <= 1
 GROUP BY c.doc_id, c.chunk_pos, c.chunk_text
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "q_dedup_exact",
-    "ORACLE_DEDUP_EXACT",
-    "q_doc_fingerprint",
-    "ORACLE_DOC_FINGERPRINT",
-    "_STOPWORDS",
-    "q_text_quality",
-    "ORACLE_TEXT_QUALITY",
-    "_LANG_WORDS",
-    "q_doc_repetition",
-    "ORACLE_DOC_REPETITION",
-    "q_lang_id",
-    "_lang_hits_sql",
-    "ORACLE_LANG_ID",
-    "_KANA_CLASS",
-    "_HANGUL_CLASS",
-    "_HAN_CLASS",
-    "CJK_LANG_CORPUS",
-    "q_lang_id_cjk",
-    "ORACLE_LANG_ID_CJK",
-    "_N_MINHASH",
-    "_portable_hash_expr",
-    "q_minhash_signatures",
-    "_oracle_mh_windows",
-    "ORACLE_MINHASH_SIGNATURES",
-    "q_minhash_lsh_candidates",
-    "ORACLE_MINHASH_LSH_CANDIDATES",
-    "q_dedup_components",
-    "ORACLE_DEDUP_COMPONENTS",
-    "q_ngram_jaccard_pairs",
-    "ORACLE_NGRAM_JACCARD_PAIRS",
-    "_NEARDUP_THRESHOLD",
-    "_NEARDUP_EXACT_MAX_ROWS_ENV",
-    "_NEARDUP_EXACT_MAX_ROWS_DEFAULT",
-    "_neardup_exact_max_rows",
-    "q_embedding_near_dup",
-    "q_embedding_near_dup_auto",
-    "_embedding_near_dup_exact",
-    "_IVF_NEARDUP_CELL_ROWS",
-    "_IVF_NEARDUP_FLAT_MAX_NLIST",
-    "_IVF_NEARDUP_IMI_MAX_K",
-    "_sampled_spherical_kmeans",
-    "q_embedding_near_dup_ivf",
-    "_neardup_pairs_from_cells",
-    "_embedding_near_dup_ivf_arrow",
-    "_sampled_subspace_kmeans",
-    "_embedding_near_dup_imi",
-    "ORACLE_EMBEDDING_NEAR_DUP",
-    "_SEMDEDUP_K",
-    "_SEMDEDUP_TAU",
-    "_SEMDEDUP_CENTROIDS",
-    "_SEMDEDUP_FIXED_MAX_ROWS_ENV",
-    "_SEMDEDUP_FIXED_MAX_ROWS_DEFAULT",
-    "_semdedup_fixed_max_rows",
-    "_SEMDEDUP_PIN_MIN_ROWS_ENV",
-    "_SEMDEDUP_PIN_MIN_ROWS_DEFAULT",
-    "_semdedup_pin_min_rows",
-    "_assign_fixed_cells",
-    "q_semantic_dedup",
-    "_semdedup_cents_sql",
-    "_SEMDEDUP_PAIR_COS",
-    "ORACLE_SEMANTIC_DEDUP",
-    "_semantic_dedup_trained",
-    "q_incremental_semantic_dedup",
-    "q_semantic_dedup_auto",
-    "q_group_topk",
-    "ORACLE_GROUP_TOPK",
-    "q_group_topk_salted",
-    "q_agg_groupby_stats",
-    "ORACLE_AGG_GROUPBY_STATS",
-    "_SIMHASH_BITS",
-    "_SIMHASH_FIELD_BITS",
-    "_SIMHASH_FIELDS_PER_LONG",
-    "q_simhash_fingerprint",
-    "_simhash_oracle_cte",
-    "ORACLE_SIMHASH_FINGERPRINT",
-    "_SIMHASH_MAX_HD",
-    "_SIMHASH_BANDS",
-    "q_simhash_near_dup",
-    "ORACLE_SIMHASH_NEAR_DUP",
-    "_BPE_ISH_RE",
-    "q_token_count",
-    "ORACLE_TOKEN_COUNT",
-    "_HYBRID_WEIGHTS",
-    "q_hybrid_weighted",
-    "ORACLE_HYBRID_WEIGHTED",
-    "_CHUNK_TOKENS",
-    "_CHUNK_HIT_TOKEN",
-    "q_chunk_expand",
-    "ORACLE_CHUNK_EXPAND",
-]

@@ -2,7 +2,11 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.qfam.core import ROUND_DIGITS, load, load_wide
 
 # --------------------------------------------------------------------------
 # §2.7 relational breadth: grouping sets / pivot / unpivot / TPC-H shapes
@@ -986,58 +990,3 @@ FROM (
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "q_grouping_sets_agg",
-    "ORACLE_GROUPING_SETS_AGG",
-    "q_pivot_wide",
-    "ORACLE_PIVOT_WIDE",
-    "q_unpivot_long",
-    "ORACLE_UNPIVOT_LONG",
-    "q_pricing_summary",
-    "ORACLE_PRICING_SUMMARY",
-    "q_top_revenue_orders",
-    "ORACLE_TOP_REVENUE_ORDERS",
-    "q_correlated_subquery",
-    "q_time_gap_fill",
-    "ORACLE_TIME_GAP_FILL",
-    "q_funnel_steps",
-    "ORACLE_FUNNEL_STEPS",
-    "q_retention_cohorts",
-    "ORACLE_RETENTION_COHORTS",
-    "q_percentile_disc",
-    "ORACLE_PERCENTILE_DISC",
-    "q_heavy_hitters",
-    "q_corr_stats",
-    "ORACLE_CORR_STATS",
-    "q_zscore_outliers",
-    "ORACLE_ZSCORE_OUTLIERS",
-    "q_window_range_frame",
-    "ORACLE_WINDOW_RANGE_FRAME",
-    "q_nation_volume_shipping",
-    "ORACLE_NATION_VOLUME_SHIPPING",
-    "q_national_market_share",
-    "q_order_priority_check",
-    "ORACLE_ORDER_PRIORITY_CHECK",
-    "q_customer_distribution",
-    "ORACLE_CUSTOMER_DISTRIBUTION",
-    "ORACLE_NATIONAL_MARKET_SHARE",
-    "q_promo_revenue",
-    "ORACLE_PROMO_REVENUE",
-    "q_returned_item_revenue",
-    "ORACLE_RETURNED_ITEM_REVENUE",
-    "q_local_supplier_volume",
-    "ORACLE_LOCAL_SUPPLIER_VOLUME",
-    "q_forecast_revenue_change",
-    "ORACLE_FORECAST_REVENUE_CHANGE",
-    "q_small_quantity_revenue",
-    "ORACLE_SMALL_QUANTITY_REVENUE",
-    "q_large_volume_customers",
-    "ORACLE_LARGE_VOLUME_CUSTOMERS",
-]

@@ -2,7 +2,27 @@
 
 Split out of queries.py in r12 (mechanical, order-preserving); see queries.py for the registry."""
 
-from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from aiotcvectordb_spark.engine import delete_rows, update_dataframe, upsert_dataframes
+from aiotcvectordb_spark.operators import fulltext, hybrid, knn
+from aiotcvectordb_spark.functions import sparse as sparse_fn
+from aiotcvectordb_spark.qfam.core import (
+    DIM,
+    ROUND_DIGITS,
+    _BM25_TOKS_SQL,
+    _COS_SQL,
+    _IP_SQL,
+    _L2_SQL,
+    _duck_bm25_toks_sql,
+    _knn_oracle,
+    _sql_queries_cte,
+    _sql_vec,
+    load,
+    load_wide,
+    qvec,
+)
 
 # --------------------------------------------------------------------------
 # §2.5 vector search (ops 28-31)
@@ -912,90 +932,3 @@ weights AS (
 SELECT doc_id, count(*) AS n_terms, round(sum(w), {ROUND_DIGITS}) AS weight_sum
 FROM weights GROUP BY doc_id
 """
-
-
-
-
-# auto-generated by tools/split_queries.py: star-import
-# re-export surface (underscore helpers included — tests
-# and the registry address them as queries.<name>)
-__all__ = [
-    "FLAGSHIP_VECTORS",
-    "q_search_flat_cosine",
-    "ORACLE_SEARCH_FLAT_COSINE",
-    "q_search_grouped",
-    "ORACLE_SEARCH_GROUPED",
-    "_N_BIN_BYTES",
-    "_binarize_spark_expr",
-    "_binarize_py",
-    "q_search_binary_hamming",
-    "_bin_byte_sql",
-    "ORACLE_SEARCH_BINARY_HAMMING",
-    "q_search_flat_cosine_local_topk",
-    "q_search_udtf_topk",
-    "ORACLE_SEARCH_UDTF_TOPK",
-    "_L2_VECTORS",
-    "q_search_flat_l2",
-    "ORACLE_SEARCH_FLAT_L2",
-    "_IP_VECTORS",
-    "q_search_flat_ip",
-    "ORACLE_SEARCH_FLAT_IP",
-    "_RADIUS_VECTORS",
-    "_RADIUS",
-    "q_search_radius",
-    "ORACLE_SEARCH_RADIUS",
-    "_BYID_IDS",
-    "q_search_by_id",
-    "ORACLE_SEARCH_BY_ID",
-    "q_knn_join",
-    "ORACLE_KNN_JOIN",
-    "_TS_EPOCH_SPARK",
-    "_TS_EPOCH_SQL",
-    "q_query_filter_sort_paginate",
-    "ORACLE_QUERY_FILTER_SORT_PAGINATE",
-    "_QUERY_IDS",
-    "q_query_by_ids",
-    "ORACLE_QUERY_BY_IDS",
-    "q_count_filter",
-    "ORACLE_COUNT_FILTER",
-    "q_query_projection",
-    "ORACLE_QUERY_PROJECTION",
-    "_TTL_CUTOFF",
-    "q_ttl_filter",
-    "ORACLE_TTL_FILTER",
-    "q_json_extract",
-    "ORACLE_JSON_EXTRACT",
-    "_upsert_batch",
-    "q_upsert_merge",
-    "ORACLE_UPSERT_MERGE",
-    "q_update_conditional",
-    "ORACLE_UPDATE_CONDITIONAL",
-    "q_delete_filter_limit",
-    "ORACLE_DELETE_FILTER_LIMIT",
-    "_FT_QUERY",
-    "_SPARSE_INDEX_CACHE",
-    "sparse_index",
-    "q_fulltext_bm25",
-    "_bm25_base_cte",
-    "_bm25_oracle_cte",
-    "ORACLE_FULLTEXT_BM25",
-    "_PHRASE_QUERY",
-    "_phrase_count_col",
-    "q_fulltext_phrase",
-    "_phrase_oracle",
-    "ORACLE_FULLTEXT_PHRASE",
-    "CJK_CORPUS",
-    "_CJK_QUERY",
-    "q_fulltext_bm25_cjk",
-    "_cjk_oracle",
-    "ORACLE_FULLTEXT_BM25_CJK",
-    "_CJK_PHRASE",
-    "q_fulltext_phrase_cjk",
-    "_cjk_phrase_oracle",
-    "ORACLE_FULLTEXT_PHRASE_CJK",
-    "_HYBRID_VEC",
-    "q_hybrid_rrf",
-    "ORACLE_HYBRID_RRF",
-    "q_sparse_encode",
-    "ORACLE_SPARSE_ENCODE",
-]

@@ -5,15 +5,21 @@ north-star LLM-pipeline extension). Each Spark callable takes
 ``(spark, sf_dir)`` and returns a DataFrame whose columns/aliases match
 the oracle SQL exactly; the driver hash-compares them at sf0.01.
 
-r12: the query implementations live in ``qfam/`` family modules
-(core / vector / textdedup / relational / extracts / tpch / curation
-/ analytics_media), star-re-exported here through generated ``__all__``
-lists so every existing ``queries.<name>`` reference — including the
-underscore helpers the tests pin — keeps working and the QUERIES/ORACLES
-registry (and ``tools/rotate_registry.py``'s block rewrite) is unchanged.
+The query implementations live in the ``qfam/`` family modules (core /
+vector / textdedup / relational / extracts / tpch / curation /
+analytics_media). This module is the one registry façade: it
+star-imports their public names, every ``q_*`` callable and ``ORACLE_*``
+SQL string among them, so ``queries.<name>`` resolves for each registry
+entry, and builds the QUERIES/ORACLES dicts (``tools/rotate_registry.py``
+rewrites the QUERIES block). Private helpers are not re-exported: import
+them from the module that defines them.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 from aiotcvectordb_spark.qfam.core import *  # noqa: F401,F403
 from aiotcvectordb_spark.qfam.vector import *  # noqa: F401,F403
@@ -23,6 +29,13 @@ from aiotcvectordb_spark.qfam.extracts import *  # noqa: F401,F403
 from aiotcvectordb_spark.qfam.tpch import *  # noqa: F401,F403
 from aiotcvectordb_spark.qfam.curation import *  # noqa: F401,F403
 from aiotcvectordb_spark.qfam.analytics_media import *  # noqa: F401,F403
+from aiotcvectordb_spark.qfam.core import _INCR_SPLIT
+from aiotcvectordb_spark.qfam.curation import _CURATE_CLEAN_SQL, _CURATE_H60, _V2_GATE_FLAGS
+from aiotcvectordb_spark.qfam.textdedup import (
+    _SEMDEDUP_PAIR_COS,
+    _SEMDEDUP_TAU,
+    _semdedup_cents_sql,
+)
 
 # --------------------------------------------------------------------------
 # Registry

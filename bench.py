@@ -19,195 +19,30 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from aiotcvectordb_spark import queries as Q
 from aiotcvectordb_spark.session import get_spark
 
-HEADLINE = [
-    "search_flat_cosine",
-    "search_by_id",
-    "query_filter_sort_paginate",
-    "count_filter",
-    "fulltext_bm25",
-    "hybrid_rrf",
-    "upsert_merge",
-    "delete_filter_limit",
-    "dedup_exact",
-    "minhash_lsh_candidates",
-    "embedding_near_dup",
-    "semantic_dedup",
-    "incremental_semantic_dedup",  # r9: oracled + headlined
-    "simhash_near_dup",
-    "token_count",
-    "text_quality",
-    "group_topk",
-    "agg_groupby_stats",
-    "hybrid_weighted",
-    "chunk_expand",
-    "join_pruned_dims",
-    "window_running",
-    "rollup_agg",
-    "cube_agg",
-    "percentiles",
-    "window_funcs",
-    "scalar_funcs",
-    "approx_sketches",
-    "event_window_agg",
-    "sessionize",
-    "asof_join",
-    "interval_join",
-    "multimodal_features",
-    "pricing_summary",
-    "top_revenue_orders",
-    "grouping_sets_agg",
-    "pivot_wide",
-    "correlated_subquery",
-    "clean_text",
-    "dataset_split",
-    "curate_corpus",
-    "curate_corpus_v2",
-    "nation_volume_shipping",
-    "time_gap_fill",
-    "window_range_frame",
-    "zscore_outliers",
-    "corr_stats",
-    "heavy_hitters",
-    "percentile_disc",
-    "funnel_steps",
-    "retention_cohorts",
-    "national_market_share",
-    "order_priority_check",
-    "customer_distribution",
-    "dedup_components",
-    "search_udtf_topk",
-    "promo_revenue",
-    "returned_item_revenue",
-    "local_supplier_volume",
-    "forecast_revenue_change",
-    "small_quantity_revenue",
-    "large_volume_customers",
-    "doc_repetition",
-    "sliding_window_agg",
-    "price_histogram",
-    "unigram_logprob",
-    "perplexity_filter",
-    "dsir_weights",
-    "quality_classifier",
-    "gopher_quality_filter",
-    "c4_quality_filter",
-    "training_shards",
-    "ewma_smooth",
-    "mmr_rerank",
-    "embedding_pca",
-    "bigram_logprob",
-    "incremental_dedup",
-    "source_quota",
-    "profile_table",
-    "equidepth_histogram",
-    "lang_top_terms",
-    "group_topk_salted",
-    "label_centroids",
-    "attribution_last_touch",
-    "audio_probe",
-    "ann_bq_cosine",
-    "video_frames",
-    "embedding_outliers",
-    "rolling_active_users",
-    "ann_ivf_fullprobe",
-    "ann_pq_fullrescore",
-    "jpeg_probe",
-    "pack_sequences",
-    "pack_sequences_nosplit",
-    "bpe_token_count",
-    "fulltext_bm25_cjk",
-    "lang_id_cjk",
-    "audio_adpcm_probe",
-    "audio_mp3_probe",
-    "jpeg_progressive_probe",
-    "pdf_extract",
-    "doc_extract",
-    "ppt_extract",
-    "xls_extract",
-    "docx_extract",
-    "pptx_extract",
-    "xlsx_extract",
-    "rtf_extract",
-    "epub_extract",
-    "gif_frames",
-    "line_dedup",
-    "incremental_line_dedup",  # r9: the 5th ingest twin's batch form
-    "decontaminate_fraction",  # r9: PaLM graded decontamination rule
-    "ann_sq8_cosine",  # r9: int8 grid quantizer, oracled
-    "gram_novelty",  # r9: corpus-order first-seen gram profile
-    "incremental_gram_novelty",  # r9: newest-slice novelty vs standing index
-    "stratified_sample_hash",  # r9: reproducible map-side sampler
-    "search_grouped",  # r9: diversify-by-label group_by search
-    "fulltext_phrase",  # r9: exact-phrase adjacency match
-    "fulltext_phrase_cjk",  # r9: phrase over the CJK bigram stream
-    "ann_ivf_cosine_fixed",  # r10: oracled IVF cell-prune plan
-    "substring_dedup_hashed_portable",  # r10: oracled hashed lane (md5 twin)
-    "incremental_decontaminate_fraction",  # r10: 7th twin's batch form
-    "bpe_token_count_frozen",  # r10: frozen-merge apply lane (oracle staged)
-    "weighted_sample_hash",  # r10: E-S weighted sampling (oracle staged)
-    "winnow_fingerprint",  # r10: MOSS winnowing fingerprints (oracle staged)
-    "token_entropy",  # r10: per-doc Shannon entropy (oracle staged)
-    "substring_dedup",
-    "substring_dedup_hashed",
-    "substring_dedup_cjk",
-    "incremental_substring_dedup_cjk",
-    "incremental_substring_dedup",
-    "dataset_mix",
-    # r11 additions: the four new oracled rows
-    "substring_dedup_cjk_hashed",  # r11: oracled hashed CJK lane (md5 twin)
-    "quality_classifier_frozen",  # r11: frozen-weights scoring pass
-    "embedding_pca_fixed",  # r11: frozen-basis projection matmul
-    "audio_mp3_meta",  # r11: header-walk metadata route (vs full decode)
-    "jpeg_meta",  # r11: SOF header route (vs entropy decode)
-    "ann_pq_cosine_fixed",  # r11: frozen-codebook PQ partial path
-    "ann_lsh_l2_fixed",  # r11: frozen-plane LSH bucket prune
-    # r12: bench blind spot closed (r11 verdict item #6) — every
-    # ORACLED registry query is a HEADLINE row, so a plan regression
-    # in any user-facing op is visible to the 2x gate, not just to the
-    # driver's hash check. The 30 rows below were correctness-checked
-    # but unbenched through r11.
-    "search_flat_ip",
-    "search_flat_l2",
-    "search_flat_cosine_local_topk",
-    "search_radius",
-    "search_by_text",
-    "search_binary_hamming",
-    "knn_join",
-    "query_by_ids",
-    "query_projection",
-    "ttl_filter",
-    "update_conditional",
-    "json_extract",
-    "set_ops",
-    "semi_anti_join",
-    "unpivot_long",
-    "lang_id",
-    "sparse_encode",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "simhash_fingerprint",
-    "benchmark_decontaminate",
-    "dataset_mix_temp",
-    "doc_fingerprint",
-    "multimodal_meta",
-    "image_probe",
-    "sessionize_udtf",
-    "pii_scrub",
-    "audio_adpcm_meta",  # r12: ADPCM header-walk metadata route
-    "video_mjpeg_meta",  # r12: MJPEG container + frame-walk metadata
-    "video_mjpeg_frames",  # r12: full Huffman+IDCT frame decode
-]
-
 # Deliberately NOT benched (the documented exclusion policy the r11
 # verdict asked for): the 8 rows-only registry entries whose standing
-# perf row would duplicate an already-benched twin's kernel —
-# trained-lane ANN (ann_ivf/pq/lsh_* — the frozen *_fixed twins bench
-# the identical partial path with pinned inputs), engine-RNG sampling
-# (stratified_sample — stratified_sample_hash benches the same
-# sampler), and the data-dependent scale routers (*_auto,
-# embedding_near_dup_ivf — they dispatch to kernels benched under
-# their own names; timing the router re-times the kernel plus a
-# count()). Every OTHER registry query is a HEADLINE row.
+# perf row would duplicate an already-benched twin's kernel.
+_NOT_BENCHED = frozenset({
+    # trained-lane ANN: the frozen *_fixed twins bench the identical
+    # partial path with pinned inputs
+    "ann_ivf_cosine",
+    "ann_lsh_l2",
+    "ann_pq_cosine",
+    # engine-RNG sampling: stratified_sample_hash benches the same sampler
+    "stratified_sample",
+    # data-dependent scale routers: they dispatch to kernels benched
+    # under their own names; timing the router re-times the kernel plus
+    # a count()
+    "curate_corpus_v2_auto",
+    "embedding_near_dup_auto",
+    "embedding_near_dup_ivf",
+    "semantic_dedup_auto",
+})
+
+# Every OTHER registry query is a HEADLINE row, so a plan regression in
+# any user-facing op is visible to the gate. Sorted, so registry
+# rotation cannot reorder the bench passes.
+HEADLINE = sorted(set(Q.QUERIES) - _NOT_BENCHED)
 
 # Inline subset for the driver-visible JSON line (kept small so the
 # line survives the driver's 2000-char tail capture); the full table

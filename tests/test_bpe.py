@@ -170,7 +170,7 @@ def test_bpe_frozen_equals_live_encode_semantics(spark):
     """bpe_encode with the frozen table applies the same greedy rule as
     with any merge list — spot-check a constructed doc whose words
     exercise rank ties, chained merges, and unknown symbols."""
-    from aiotcvectordb_spark import queries as Q
+    from aiotcvectordb_spark.qfam.extracts import _BPE_FROZEN_MERGES
 
     df = spark.createDataFrame(
         [(1, "order merge batch zzz"), (2, ""), (3, "filter filter")],
@@ -178,10 +178,10 @@ def test_bpe_frozen_equals_live_encode_semantics(spark):
     )
     rows = {
         r.doc_id: (r.n_tokens, r.tokens)
-        for r in bpe.bpe_encode(df, Q._BPE_FROZEN_MERGES).collect()
+        for r in bpe.bpe_encode(df, _BPE_FROZEN_MERGES).collect()
     }
     # python reference: encode_word semantics (leftmost lowest-rank)
-    ranks = {m: i for i, m in enumerate(Q._BPE_FROZEN_MERGES)}
+    ranks = {m: i for i, m in enumerate(_BPE_FROZEN_MERGES)}
 
     def ref(word):
         syms = list(word) + ["</w>"]

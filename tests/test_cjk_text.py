@@ -65,11 +65,11 @@ def test_duckdb_oracle_tokenizer_matches_python():
     equality that makes every CJK-aware oracle trustworthy."""
     import duckdb
 
-    from aiotcvectordb_spark import queries as Q
+    from aiotcvectordb_spark.qfam.core import _BM25_TOKS_SQL
 
     texts = [t for _, t in CJK_DOCS] + ["茶", "", "！？", "한국어 text です"]
     con = duckdb.connect()
-    expr = Q._BM25_TOKS_SQL
+    expr = _BM25_TOKS_SQL
     got = [
         con.execute(f"SELECT {expr} FROM (SELECT ? AS text)", [t]).fetchone()[0]
         for t in texts

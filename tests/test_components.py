@@ -92,6 +92,24 @@ def test_distributed_path_matches_union_find(spark, edges):
     assert got == _union_find(edges)
 
 
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(edges=edges_st)
+def test_star_round_feeds_frozen_star_test_distinct_oriented_edges(spark, edges):
+    """_mark_frozen_stars' degree-local star test is exact only on a
+    distinct, (a > b)-oriented edge list; one large-star + small-star
+    round must always produce one."""
+    from aiotcvectordb_spark.operators.components import _large_star, _small_star
+
+    df = spark.createDataFrame(edges, "a: long, b: long")
+    out = [(r.a, r.b) for r in _small_star(_large_star(df)).collect()]
+    assert len(out) == len(set(out))
+    assert all(a > b for a, b in out)
+
+
 def test_zigzag_chain_converges_fast(spark):
     """Adversarial id/topology correlation: a path whose ids zigzag
     (1-100-2-99-3-98...) defeats label pointer-jumping but star

@@ -236,9 +236,11 @@ def test_embedding_near_dup_imi_path(spark, sf_dir):
     the nlist ∝ N design that holds past the old 4096 cap: K² cells
     from 2K driver-trainable centroids."""
     from aiotcvectordb_spark.plans import audit
-    from aiotcvectordb_spark.queries import _IVF_NEARDUP_FLAT_MAX_NLIST
-
-    from aiotcvectordb_spark.queries import _embedding_near_dup_imi, load
+    from aiotcvectordb_spark.qfam.core import load
+    from aiotcvectordb_spark.qfam.textdedup import (
+        _IVF_NEARDUP_FLAT_MAX_NLIST,
+        _embedding_near_dup_imi,
+    )
 
     exact = {(r.vec_a, r.vec_b) for r in Q.q_embedding_near_dup(spark, sf_dir).collect()}
     emb = load(spark, sf_dir, "embeddings")
@@ -443,14 +445,21 @@ def test_substring_dedup_cjk_hashed_equals_string_plan(spark, sf_dir):
     portable-md5 twin, and the string-keyed plan — must be bit-equal
     on the fixture corpus in BOTH lanes (word and char)."""
     from aiotcvectordb_spark import pipelines, queries as Q
+    from aiotcvectordb_spark.qfam.curation import (
+        _CJK_DST,
+        _CJK_SRC,
+        _SUBSTR_CJK_CHAR_N,
+        _SUBSTR_DEDUP_N,
+        _word_ngrams,
+    )
 
     def run_string_keyed():
         # the pre-r11 string-gram plan, reproduced via lane_cut default
-        n_w, n_c = Q._SUBSTR_DEDUP_N, Q._SUBSTR_CJK_CHAR_N
+        n_w, n_c = _SUBSTR_DEDUP_N, _SUBSTR_CJK_CHAR_N
         df = Q.ensure_min_partitions(
             Q.load(spark, sf_dir, "documents")
         ).filter(F.length("text") > 0)
-        cjkified = F.translate(F.col("text"), Q._CJK_SRC + " ", Q._CJK_DST)
+        cjkified = F.translate(F.col("text"), _CJK_SRC + " ", _CJK_DST)
         corpus = df.select(
             "doc_id",
             F.when(
@@ -468,7 +477,7 @@ def test_substring_dedup_cjk_hashed_equals_string_plan(spark, sf_dir):
         char_docs = routed.filter(is_cjk).select("doc_id", "text")
         empty = spark.createDataFrame([], "gram string")
         out_w, _ = pipelines.lane_cut(
-            word_docs, Q._word_ngrams(word_docs, n_w), empty, n_w, " "
+            word_docs, _word_ngrams(word_docs, n_w), empty, n_w, " "
         )
         out_c, _ = pipelines.lane_cut(
             char_docs, pipelines.char_ngrams(char_docs, n_c), empty, n_c, ""

@@ -197,6 +197,7 @@ def test_semantic_dedup_trained_path_matches_keep_semantics(spark, tmp_path):
     scaled copies, keeper = least centroid-similar (ccos ASC, vec_id
     ASC), flags deterministic across runs."""
     from aiotcvectordb_spark import queries as Q
+    from aiotcvectordb_spark.qfam.textdedup import _semantic_dedup_trained
 
     rng = np.random.default_rng(3)
     rows = []
@@ -211,7 +212,7 @@ def test_semantic_dedup_trained_path_matches_keep_semantics(spark, tmp_path):
             (vid, [float(x) for x in rng.normal(size=Q.DIM)])
         ); vid += 1
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = Q._semantic_dedup_trained(spark, emb, nlist=4)
+    out = _semantic_dedup_trained(spark, emb, nlist=4)
     flags = {r.vec_id: r for r in out.collect()}
     assert len(flags) == len(rows)
     # every scaled-copy group collapses to exactly one keeper (copies
@@ -223,7 +224,7 @@ def test_semantic_dedup_trained_path_matches_keep_semantics(spark, tmp_path):
         assert {flags[i].cell for i in ids} == {flags[ids[0]].cell}
     # determinism
     again = {r.vec_id: r.semantic_dup for r in
-             Q._semantic_dedup_trained(spark, emb, nlist=4).collect()}
+             _semantic_dedup_trained(spark, emb, nlist=4).collect()}
     assert again == {v: r.semantic_dup for v, r in flags.items()}
 
 

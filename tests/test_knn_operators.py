@@ -32,12 +32,12 @@ def test_local_topk_equals_sql_hamming(spark, sf_dir):
     distances — no float tolerance needed)."""
     from pyspark.sql import functions as F
 
-    from aiotcvectordb_spark import queries as Q
+    from aiotcvectordb_spark.qfam.vector import _binarize_py, _binarize_spark_expr
 
     df = _emb(spark, sf_dir).select(
-        "vec_id", F.expr(Q._binarize_spark_expr("embedding")).alias("bvec")
+        "vec_id", F.expr(_binarize_spark_expr("embedding")).alias("bvec")
     )
-    vecs = [Q._binarize_py(qvec(1.0)), Q._binarize_py(qvec(-2.0))]
+    vecs = [_binarize_py(qvec(1.0)), _binarize_py(qvec(-2.0))]
     kw = dict(
         vector_col="bvec", id_col="vec_id", metric="HAMMING",
         limit=10, round_digits=6,
@@ -52,8 +52,8 @@ def test_engine_bin_flat_hamming(spark, sf_dir, engine):
     HAMMING through the engine surface."""
     from pyspark.sql import functions as F
 
-    from aiotcvectordb_spark import queries as Q
     from aiotcvectordb_spark.catalog import IndexField
+    from aiotcvectordb_spark.qfam.vector import _binarize_py, _binarize_spark_expr
 
     db = "db_bin"
     engine.create_database(db)
@@ -68,10 +68,10 @@ def test_engine_bin_flat_hamming(spark, sf_dir, engine):
         ],
     )
     emb = _emb(spark, sf_dir).select(
-        "vec_id", F.expr(Q._binarize_spark_expr("embedding")).alias("bvec")
+        "vec_id", F.expr(_binarize_spark_expr("embedding")).alias("bvec")
     )
     engine.store.write(emb, db, "emb")
-    q = Q._binarize_py(qvec(1.0))
+    q = _binarize_py(qvec(1.0))
     hits = engine.search(db, "emb", [q], limit=5)
     assert len(hits[0]) == 5
     # ascending integral distances
@@ -392,6 +392,7 @@ def test_ivf_fixed_scores_are_exact_cosines_within_probed_cells(spark, sf_dir):
     probe set."""
     from aiotcvectordb_spark import queries as Q
     from aiotcvectordb_spark.functions.vector import cosine_score_fixed
+    from aiotcvectordb_spark.qfam.analytics_media import _IVF_FIXED_NPROBE
     from pyspark.sql import functions as F
 
     out = Q.q_ann_ivf_cosine_fixed(spark, sf_dir).collect()
@@ -403,7 +404,7 @@ def test_ivf_fixed_scores_are_exact_cosines_within_probed_cells(spark, sf_dir):
         assert [r.rank for r in sorted(rows, key=lambda r: r.rank)] == list(
             range(1, 11)
         )
-        assert len({r.cell for r in rows}) <= Q._IVF_FIXED_NPROBE
+        assert len({r.cell for r in rows}) <= _IVF_FIXED_NPROBE
     # exact-rescore check: recompute flat cosine for the hit ids
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     for qi, v in enumerate(Q.FLAGSHIP_VECTORS):

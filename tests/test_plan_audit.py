@@ -334,9 +334,10 @@ def test_embedding_near_dup_scale_routing(spark, sf_dir, monkeypatch):
     vouch for the plan that actually runs)."""
     from aiotcvectordb_spark import queries as Q
     from aiotcvectordb_spark.plans import audit
+    from aiotcvectordb_spark.qfam.textdedup import _NEARDUP_EXACT_MAX_ROWS_ENV
 
     # force the knee BELOW the fixture size -> auto must route to IVF
-    monkeypatch.setenv(Q._NEARDUP_EXACT_MAX_ROWS_ENV, "1")
+    monkeypatch.setenv(_NEARDUP_EXACT_MAX_ROWS_ENV, "1")
     routed = Q.q_embedding_near_dup_auto(spark, sf_dir)
     plan = audit.executed_plan(routed)
     assert "BroadcastNestedLoop" not in plan
@@ -346,7 +347,7 @@ def test_embedding_near_dup_scale_routing(spark, sf_dir, monkeypatch):
     assert "MapInPandas" in audit.executed_plan(oracled)
 
     # default knee (20k, r5) -> fixture routes to the exact broadcast plan
-    monkeypatch.delenv(Q._NEARDUP_EXACT_MAX_ROWS_ENV, raising=False)
+    monkeypatch.delenv(_NEARDUP_EXACT_MAX_ROWS_ENV, raising=False)
     exact = Q.q_embedding_near_dup_auto(spark, sf_dir)
     plan = audit.executed_plan(exact)
     assert "MapInPandas" in plan

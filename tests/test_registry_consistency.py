@@ -25,6 +25,9 @@ def test_bench_headline_resolves():
     missing = set(bench.HEADLINE) - set(Q.QUERIES)
     assert not missing, f"bench headline without queries: {missing}"
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "duplicate headline"
+    # a renamed exclusion must not silently put its entry back on the bench
+    stale = bench._NOT_BENCHED - set(Q.QUERIES)
+    assert not stale, f"bench exclusions without queries: {stale}"
 
 
 def test_scale_probe_resolves():

@@ -207,7 +207,8 @@ def test_sql_hash_embedder_matches_dense_embed_udf(spark):
     import math
 
     from aiotcvectordb_spark.functions.embedding import _embed_one
-    from aiotcvectordb_spark.queries import DIM, _hash_embed_sparse
+    from aiotcvectordb_spark.qfam.core import DIM
+    from aiotcvectordb_spark.qfam.extracts import _hash_embed_sparse
 
     texts = [
         (1, "spark dataframe join aggregation shuffle"),
@@ -293,13 +294,14 @@ def test_phrase_postings_path_equals_scan_fold(spark):
     hits, which would vacuously pass)."""
     from aiotcvectordb_spark import queries as Q
     from aiotcvectordb_spark.operators import fulltext
+    from aiotcvectordb_spark.qfam.vector import _PHRASE_QUERY
 
     sf_dir = "/root/testdata/sf0.01"
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     via_postings = {
         (r.doc_id, r.phrase_count, r.rank)
         for r in fulltext.phrase_search_postings(
-            docs, Q._PHRASE_QUERY, id_col="doc_id", text_col="text"
+            docs, _PHRASE_QUERY, id_col="doc_id", text_col="text"
         ).collect()
     }
     via_scan = {
@@ -347,8 +349,8 @@ def test_cjk_phrase_cross_segment_chain_edge(spark):
     inside a single segment. Both engines share the tokenizer (parity
     holds); this test documents the semantics so a future
     sentinel-token fix must consciously update it."""
-    from aiotcvectordb_spark import queries as Q
     from aiotcvectordb_spark.functions import sparse as sparse_fn
+    from aiotcvectordb_spark.qfam.vector import _phrase_count_col
 
     toks = sparse_fn._TOKENS_FOR_QUERY("大苹果")
     df = spark.createDataFrame(
@@ -358,7 +360,7 @@ def test_cjk_phrase_cross_segment_chain_edge(spark):
     got = {
         r.doc_id: r.phrase_count
         for r in df.select(
-            "doc_id", Q._phrase_count_col(toks).alias("phrase_count")
+            "doc_id", _phrase_count_col(toks).alias("phrase_count")
         ).collect()
     }
     # x_edge: spurious cross-segment chain; x_clean: one real hit

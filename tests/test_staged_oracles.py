@@ -12,6 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from aiotcvectordb_spark import queries as Q
+from aiotcvectordb_spark.qfam.curation import (
+    _WEIGHTED_SAMPLE_K,
+    _WINNOW_K,
+    _WINNOW_W,
+    _winnow_selection,
+)
 
 STAGED = {
     "weighted_sample_hash": "ORACLE_WEIGHTED_SAMPLE_HASH",
@@ -84,7 +90,7 @@ def test_winnow_matches_python_reference(spark, tmp_path):
     df = spark.createDataFrame(texts, "doc_id long, text string")
     df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {}
-    for r in Q._winnow_selection(spark, str(tmp_path)).collect():
+    for r in _winnow_selection(spark, str(tmp_path)).collect():
         got.setdefault(r.doc_id, set()).add((r.pos, r.h))
 
     import hashlib
@@ -92,7 +98,7 @@ def test_winnow_matches_python_reference(spark, tmp_path):
     def h60(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 2147483648
 
-    k, w = Q._WINNOW_K, Q._WINNOW_W
+    k, w = _WINNOW_K, _WINNOW_W
     want = {}
     for doc_id, text in texts:
         if len(text) < k + w - 1:
@@ -120,7 +126,7 @@ def test_winnow_guarantee_shared_substring(spark, tmp_path):
     )
     df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     by_doc = {}
-    for r in Q._winnow_selection(spark, str(tmp_path)).collect():
+    for r in _winnow_selection(spark, str(tmp_path)).collect():
         by_doc.setdefault(r.doc_id, set()).add(r.h)
     assert by_doc[1] & by_doc[2]
 
@@ -130,7 +136,7 @@ def test_weighted_sample_proportional_to_size(spark, sf_dir):
     weight must exceed the corpus mean weight (proportional-to-size),
     and the frame is exactly k ranked rows with negative log keys."""
     out = Q.QUERIES["weighted_sample_hash"](spark, sf_dir).collect()
-    assert len(out) == Q._WEIGHTED_SAMPLE_K
+    assert len(out) == _WEIGHTED_SAMPLE_K
     assert [r.rank for r in out] == sorted(r.rank for r in out)
     assert all(r.key <= 0 for r in out)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
@@ -176,9 +182,7 @@ def test_winnow_property_matches_python_reference(spark, tmp_path):
 
     from hypothesis import given, settings, strategies as st
 
-    from aiotcvectordb_spark import queries as Q
-
-    k, w = Q._WINNOW_K, Q._WINNOW_W
+    k, w = _WINNOW_K, _WINNOW_W
 
     def h60(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 2147483648
@@ -220,7 +224,7 @@ def test_winnow_property_matches_python_reference(spark, tmp_path):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {}
-    for r in Q._winnow_selection(spark, str(tmp_path)).collect():
+    for r in _winnow_selection(spark, str(tmp_path)).collect():
         got.setdefault(r.doc_id, set()).add((r.pos, r.h))
     checked = 0
     for doc_id, text in docs:

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aiotcvectordb_spark import queries as Q
+from aiotcvectordb_spark.qfam.curation import _LINE_DEDUP_MIN_COUNT, _boiler_pages
 from aiotcvectordb_spark.streaming.epochlog import epoch_ids
 from aiotcvectordb_spark.streaming.linededup import (
     _read_line_index,
@@ -16,7 +17,7 @@ from aiotcvectordb_spark.streaming.linededup import (
     stream_line_dedup_sink,
 )
 
-_MIN = Q._LINE_DEDUP_MIN_COUNT
+_MIN = _LINE_DEDUP_MIN_COUNT
 
 
 def _mk_sink(tmp_path, suffix=""):
@@ -32,7 +33,7 @@ def _pages(spark, sf_dir, pred):
         .filter(F.length("text") > 0)
         .filter(pred)
     )
-    return Q._boiler_pages(docs).withColumnRenamed("page", "text")
+    return _boiler_pages(docs).withColumnRenamed("page", "text")
 
 
 def _result_map(df):

@@ -9,6 +9,8 @@ from __future__ import annotations
 import numpy as np
 
 from aiotcvectordb_spark import queries as Q
+from aiotcvectordb_spark.qfam.core import _INCR_SPLIT
+from aiotcvectordb_spark.qfam.textdedup import _SEMDEDUP_CENTROIDS, _SEMDEDUP_TAU
 from aiotcvectordb_spark.streaming.epochlog import epoch_ids
 from aiotcvectordb_spark.streaming.semdedup import (
     _read_member_index,
@@ -17,8 +19,8 @@ from aiotcvectordb_spark.streaming.semdedup import (
     stream_semdedup_sink,
 )
 
-_TAU = Q._SEMDEDUP_TAU
-_CENTS = Q._SEMDEDUP_CENTROIDS
+_TAU = _SEMDEDUP_TAU
+_CENTS = _SEMDEDUP_CENTROIDS
 
 
 def _mk_sink(tmp_path, suffix=""):
@@ -134,7 +136,7 @@ def test_incremental_batch_query_equals_stream_epoch1(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    split = Q._INCR_SPLIT
+    split = _INCR_SPLIT
     index_dir, results_dir, sink = _mk_sink(tmp_path)
     sink(emb.filter(f"vec_id < {split}"), 0)
     sink(emb.filter(f"vec_id >= {split}"), 1)

@@ -207,7 +207,7 @@ def test_auto_stream_single_epoch_equals_batch_cjk_query(
     """The whole constructed corpus in ONE epoch (empty prior index)
     is the same computation as the batch substring_dedup_cjk query —
     equality by shared kernel, proven bit-for-bit here."""
-    from aiotcvectordb_spark.queries import _CJK_DST, _CJK_SRC
+    from aiotcvectordb_spark.qfam.curation import _CJK_DST, _CJK_SRC
 
     import hashlib
 
