@@ -117,6 +117,16 @@ RATIO_NOTES: dict[str, str] = {
         "columns and the argmax CASE are unreferenced under count(); "
         "noop pays the tokenize+match battery; sub-1 s absolute"
     ),
+    "minhash_signatures": (
+        "projection-prune: the shingle md5 digest arrays and the "
+        "windowed minhash columns are unreferenced under count(), "
+        "which runs only the tokenize + size filter; noop pays the md5 "
+        "work"
+    ),
+    "doc_fingerprint": (
+        "projection-prune: the tokenize + md5 fingerprint is a "
+        "map-only column count() never evaluates; sub-second absolute"
+    ),
     "pii_scrub": (
         "projection-prune: the three chained regexp_replace passes and "
         "regexp_count audit columns are map-only projections count() "
