@@ -30,7 +30,9 @@ import pytest
 ROOT = Path(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 PKG = ROOT / "aiotcvectordb_spark"
 REGISTRY_MODULES = ["aiotcvectordb_spark.queries"] + [
-    f"aiotcvectordb_spark.qfam.{p.stem}" for p in sorted((PKG / "qfam").glob("*.py"))
+    f"aiotcvectordb_spark.qfam.{p.stem}"
+    for p in sorted((PKG / "qfam").glob("*.py"))
+    if p.stem != "__init__"
 ]
 
 
