@@ -32,12 +32,17 @@ from aiotcvectordb_spark.catalog import (
 from aiotcvectordb_spark.errors import ParamError
 from aiotcvectordb_spark.functions.embedding import embed_udf
 from aiotcvectordb_spark.functions.filters import translate as translate_filter
+from aiotcvectordb_spark.functions.sparse import build_postings
 from aiotcvectordb_spark.operators import knn
 from aiotcvectordb_spark.sources.parquet_store import ParquetStore
 from aiotcvectordb_spark.users import UserManager
 
 UPSERT_BATCH_CAP = 1000  # reference stub.py:453
 DELETE_LIMIT_RANGE = (1, 16384)  # reference stub.py:484
+
+
+def _ttl_enabled(meta: CollectionMeta) -> bool:
+    return bool(meta.ttl_config and meta.ttl_config.get("enable"))
 
 
 def _hit_lists(rows, n_queries: int) -> list[list[dict]]:
@@ -163,7 +168,7 @@ class VectorDBEngine:
     def describe_collection(self, database: str, name: str) -> dict:
         meta = self.catalog.get_collection(database, name)
         try:
-            count = self.read(database, name).count()
+            count = self._read(database, meta).count()
         except FileNotFoundError:
             count = 0
         d = {
@@ -473,13 +478,46 @@ class VectorDBEngine:
         """Snapshot DataFrame of a collection, TTL-expired rows filtered out
         (reference op 22: ttl_config {'enable', 'timeField'}, stub.py:224-225).
         ``version`` time-travels to a retained prior snapshot (the store
-        keeps one back-version per write)."""
+        keeps one back-version per write). The current version's handle
+        is resolved once per commit (``ParquetStore.read``), so repeated
+        reads of an unchanged collection share one DataFrame."""
         meta = self.catalog.get_collection(database, collection)
+        return self._read(database, meta, honor_ttl=honor_ttl, version=version)
+
+    def _read(
+        self,
+        database: str,
+        meta: CollectionMeta,
+        *,
+        honor_ttl: bool = True,
+        version: int | None = None,
+    ) -> DataFrame:
+        """``read`` for an already-loaded catalog entry (one catalog load
+        per engine call)."""
         df = self.store.read(self.spark, database, meta.name, version=version)
-        if honor_ttl and meta.ttl_config and meta.ttl_config.get("enable"):
+        if honor_ttl and _ttl_enabled(meta):
             tf = meta.ttl_config["timeField"]
             df = df.filter(F.col(tf) > F.unix_timestamp())
         return df
+
+    def _text_corpus(
+        self, database: str, meta: CollectionMeta, *, filter: str | None,
+        text_col: str,
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """The read frame of a BM25 call, plus the BM25 postings of the
+        committed snapshot, built and persisted once per version, when
+        the corpus is that whole snapshot. With a ``filter`` or an
+        enabled TTL the corpus depends on the call or the clock, so no
+        postings are returned and the operator derives them per call."""
+        df = self._read(database, meta)
+        if filter or _ttl_enabled(meta):
+            return df, None
+        pk = meta.primary_key
+        postings = self.store.derived(
+            database, meta.name, df, ("bm25", pk, text_col),
+            lambda snap: build_postings(snap, id_col=pk, text_col=text_col)[0].persist(),
+        )
+        return df, postings
 
     def query_df(
         self,
@@ -501,7 +539,7 @@ class VectorDBEngine:
         self._pop_read_consistency({"read_consistency": read_consistency})
         meta = self.catalog.get_collection(database, collection)
         pk = meta.primary_key
-        df = self.read(database, collection)
+        df = self._read(database, meta)
         if document_ids is not None:
             df = df.filter(F.col(pk).isin(list(document_ids)))
         if filter:
@@ -748,7 +786,7 @@ class VectorDBEngine:
         )
         if kw.get("filter"):
             kw["filter"] = translate_filter(kw["filter"])
-        df = self.read(database, collection)
+        df = self._read(database, meta)
         index_type = (vix.index_type if vix else "FLAT") or "FLAT"
         if index_type.upper() == "HNSW" and ef_param is not None:
             from aiotcvectordb_spark.operators import ann
@@ -831,7 +869,7 @@ class VectorDBEngine:
     ) -> list[list[dict]]:
         self._pop_read_consistency(kw)
         meta = self.catalog.get_collection(database, collection)
-        df = self.read(database, collection)
+        df = self._read(database, meta)
         res = knn.search_by_id(
             df,
             document_ids,
@@ -871,9 +909,12 @@ class VectorDBEngine:
         meta = self.catalog.get_collection(database, collection)
         if kw.get("filter"):
             kw["filter"] = translate_filter(kw["filter"])
-        df = self.read(database, collection)
+        df, postings = self._text_corpus(
+            database, meta, filter=kw.get("filter"),
+            text_col=kw.get("text_col", "text"),
+        )
         res = fulltext.fulltext_search_df(
-            df, query_text, id_col=meta.primary_key, **kw
+            df, query_text, id_col=meta.primary_key, postings=postings, **kw
         ).collect()
         return [r.asDict(recursive=True) for r in res]
 
@@ -920,7 +961,9 @@ class VectorDBEngine:
             rerank = rerank.to_dict()
 
         meta = self.catalog.get_collection(database, collection)
-        df = self.read(database, collection)
+        df, postings = self._text_corpus(
+            database, meta, filter=filter, text_col=kw.get("text_col", "text")
+        )
         out_df = hybrid.hybrid_search_df(
             df,
             ann_vectors=ann_vectors,
@@ -930,6 +973,7 @@ class VectorDBEngine:
             rerank=rerank,
             limit=limit,
             filter=translate_filter(filter) if filter else None,
+            postings=postings,
             **kw,
         )
         out = _hit_lists(out_df.collect(), len(ann_vectors) if ann_vectors else 1)

@@ -11,8 +11,17 @@ ranked list out (collection.py:467).
 Plan: postings(term, doc, weight) join broadcast(query terms) →
 groupBy(doc).sum(weight) → top-k. The join is a broadcast hash join (the
 query has a handful of terms) and the aggregation is map-side partial —
-no full-corpus shuffle. At 100 TB the postings table is the thing you
-persist once (bucketed by term_id) and reuse per query.
+no full-corpus shuffle.
+
+A prebuilt ``postings`` index is used only when the call has no
+``filter``: it covers the whole corpus, so a filtered call derives
+postings (and the BM25 statistics) from the filtered frame instead.
+The engine passes the postings of the committed snapshot, persisted
+once per version, when the call has no filter and the collection no
+enabled TTL (``VectorDBEngine._text_corpus``); the registry persists
+one index per table (``qfam.vector.sparse_index``). At 100 TB the
+postings table is the thing you persist once (bucketed by term_id) and
+reuse per query.
 """
 
 from __future__ import annotations
@@ -39,11 +48,13 @@ def fulltext_search_df(
 ) -> DataFrame:
     """Returns (id, score, rank[, output_fields...]) ordered by BM25 desc.
 
-    ``postings`` may be passed pre-built (the persisted-index path);
-    otherwise it is derived from ``df`` on the fly.
+    ``postings`` may be passed pre-built for the whole of ``df`` (the
+    persisted-index path); it is used only when ``filter`` is None, and
+    otherwise derived from the filtered ``df`` on the fly.
     """
     if filter:
         df = df.filter(filter)
+        postings = None
     if postings is None:
         postings, _ = build_postings(df, id_col=id_col, text_col=text_col)
 

@@ -119,21 +119,21 @@ def hybrid_search_df(
     {'type': 'weighted', 'weights': [w_dense, w_sparse]}
     (reference stub.py:759 — RRFRerank / WeightedRerank).
 
-    ``postings``: prebuilt sparse index for the match leg (must cover
-    the UNFILTERED corpus only when ``filter`` is None — when filtering,
-    leave it unset so the leg derives postings from the filtered df).
+    ``postings``: prebuilt sparse index of the whole ``df`` for the
+    match leg; like ``fulltext_search_df``, the leg uses it only when
+    ``filter`` is None and otherwise derives postings from the filtered
+    df.
     """
     if ann_vectors is None and match_text is None:
         raise ValueError("hybrid_search needs an ann and/or match leg")
     rerank = rerank or {"type": "rrf", "k": RRF_DEFAULT_K}
     fetch_k = fetch_k or max(limit * 4, 40)
-    if filter:
-        df = df.filter(filter)
+    scoped = df.filter(filter) if filter else df
 
     legs = []
     if ann_vectors is not None:
         dense = knn.knn_search(
-            df,
+            scoped,
             ann_vectors,
             vector_col=vector_col,
             id_col=id_col,
@@ -150,8 +150,9 @@ def hybrid_search_df(
                 id_col=id_col,
                 text_col=text_col,
                 limit=fetch_k,
+                filter=filter,
                 round_digits=round_digits,
-                postings=postings if filter is None else None,
+                postings=postings,
             )
             .withColumn("query_idx", F.lit(0))
             .select("query_idx", id_col, "rank", "score")
@@ -170,6 +171,6 @@ def hybrid_search_df(
         fused = fused.withColumn("score", F.round(F.col("score"), round_digits))
     if output_fields:
         fused = fused.join(
-            df.select(id_col, *output_fields), id_col, "left"
+            scoped.select(id_col, *output_fields), id_col, "left"
         )
     return fused.select("query_idx", id_col, "score", "rank", *(output_fields or []))

@@ -27,19 +27,49 @@ commit point is the creation of a fresh marker object — atomic on HDFS
 
 At 100 TB swap in Delta/Iceberg by replacing this class — the protocol
 here is their commit-log idea with a trivial catalog.
+
+Each committed snapshot is resolved once per store: ``read`` keeps the
+``spark.read.parquet`` handle of every collection's current version (and
+any frames derived from it via ``derived``) until a newer commit, a
+drop, or a recreated marker is seen. The one marker listing per call
+stays, so commits by other processes are picked up on the next call.
 """
 
 from __future__ import annotations
+
+import threading
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MARKER_PREFIX = "_commit_v"
 
 
+@dataclass
+class _Snapshot:
+    """The resolved handle of one committed version, plus the persisted
+    frames derived from it (unpersisted when the entry goes)."""
+
+    version: int
+    marker_mtime: int
+    df: DataFrame
+    derived: dict = field(default_factory=dict)
+
+    def release(self) -> None:
+        for frame in self.derived.values():
+            frame.unpersist(blocking=False)
+
+
 class ParquetStore:
     def __init__(self, root: str, spark: SparkSession | None = None) -> None:
         self.root = root
         self._spark = spark
+        self._snapshots: dict[tuple[str, str], _Snapshot] = {}
+        # one lock per collection: a miss (schema-inference job) on one
+        # collection never blocks a hit on another
+        self._locks: dict[tuple[str, str], threading.Lock] = {}
+        self._locks_guard = threading.Lock()
 
     # -- Hadoop FS plumbing -------------------------------------------------
 
@@ -62,20 +92,25 @@ class ParquetStore:
     def _coll_dir(self, db: str, coll: str) -> str:
         return f"{self.root}/{db}/{coll}"
 
-    def _committed_versions(self, db: str, coll: str) -> list[int]:
+    def _markers(self, db: str, coll: str) -> dict[int, int]:
+        """Committed version -> modification time of its marker (one
+        listing). The time tells a recreated ``v0`` from a dropped one."""
         path_cls, fs = self._fs()
         cdir = path_cls(self._coll_dir(db, coll))
         if not fs.exists(cdir):
-            return []
-        out: list[int] = []
+            return {}
+        out: dict[int, int] = {}
         for st in fs.listStatus(cdir):
             name = st.getPath().getName()
             if name.startswith(_MARKER_PREFIX):
                 try:
-                    out.append(int(name[len(_MARKER_PREFIX):]))
+                    out[int(name[len(_MARKER_PREFIX):])] = st.getModificationTime()
                 except ValueError:
                     continue
-        return sorted(out)
+        return out
+
+    def _committed_versions(self, db: str, coll: str) -> list[int]:
+        return sorted(self._markers(db, coll))
 
     def current_version(self, db: str, coll: str) -> int | None:
         versions = self._committed_versions(db, coll)
@@ -97,19 +132,79 @@ class ParquetStore:
     def read(
         self, spark: SparkSession, db: str, coll: str, *, version: int | None = None
     ) -> DataFrame:
-        """Snapshot read; ``version`` time-travels to a retained prior
-        version (every write keeps one back-version before GC)."""
-        if version is None:
-            path = self.data_path(db, coll)
-            if path is None:
-                raise FileNotFoundError(f"collection {db}.{coll} has no data")
-        else:
-            if version not in self._committed_versions(db, coll):
+        """Snapshot read of the current version, or with ``version`` a
+        time-travel read of a retained prior one (every write keeps one
+        back-version before GC).
+
+        The current version's DataFrame is built once and returned again
+        while that version stays current: the entry is keyed by version
+        and marker modification time, so a commit or a drop-and-recreate
+        by another engine is seen on the next call. Time-travel reads are
+        resolved afresh every call."""
+        markers = self._markers(db, coll)
+        if version is not None:
+            if version not in markers:
                 raise FileNotFoundError(
                     f"collection {db}.{coll} has no retained version {version}"
                 )
-            path = f"{self._coll_dir(db, coll)}/v{version}"
-        return spark.read.parquet(path)
+            return spark.read.parquet(f"{self._coll_dir(db, coll)}/v{version}")
+        if not markers:
+            self._evict(db, coll)
+            raise FileNotFoundError(f"collection {db}.{coll} has no data")
+        v = max(markers)
+        with self._lock(db, coll):
+            snap = self._snapshots.get((db, coll))
+            if (
+                snap is None
+                or (snap.version, snap.marker_mtime) != (v, markers[v])
+                or snap.df.sparkSession is not spark
+            ):
+                if snap is not None:
+                    snap.release()
+                snap = _Snapshot(
+                    v, markers[v],
+                    spark.read.parquet(f"{self._coll_dir(db, coll)}/v{v}"),
+                )
+                self._snapshots[(db, coll)] = snap
+            return snap.df
+
+    def derived(
+        self,
+        db: str,
+        coll: str,
+        snapshot: DataFrame,
+        key: tuple,
+        build: Callable[[DataFrame], DataFrame],
+    ) -> DataFrame | None:
+        """``build(snapshot)`` once per committed snapshot: the result is
+        kept under ``key`` while ``snapshot`` is the handle ``read`` serves
+        for ``db.coll`` and unpersisted (non-blocking) when that handle is
+        replaced or evicted; ``build`` should return a persisted frame.
+        None when ``snapshot`` is no longer the current handle."""
+        with self._lock(db, coll):
+            snap = self._snapshots.get((db, coll))
+            if snap is None or snap.df is not snapshot:
+                return None
+            if key not in snap.derived:
+                snap.derived[key] = build(snapshot)
+            return snap.derived[key]
+
+    def _lock(self, db: str, coll: str) -> threading.Lock:
+        with self._locks_guard:
+            return self._locks.setdefault((db, coll), threading.Lock())
+
+    def _evict(self, db: str, coll: str | None = None) -> None:
+        """Drop the cached snapshot of ``db.coll`` (of every collection
+        of ``db`` when ``coll`` is None)."""
+        keys = (
+            [(db, coll)] if coll is not None
+            else [k for k in list(self._snapshots) if k[0] == db]
+        )
+        for key in keys:
+            with self._lock(*key):
+                snap = self._snapshots.pop(key, None)
+            if snap is not None:
+                snap.release()
 
     # -- writes ---------------------------------------------------------------
 
@@ -142,6 +237,7 @@ class ParquetStore:
         w.parquet(out)
         path_cls, fs = self._fs()
         fs.createNewFile(path_cls(f"{cdir}/{_MARKER_PREFIX}{nxt}"))
+        self._evict(db, coll)
         # Garbage-collect versions older than the previous one (keep one
         # back-version so in-flight readers finish). Marker first, then
         # data: a version the listing still returns always has its data.
@@ -158,3 +254,4 @@ class ParquetStore:
             f"{self.root}/{db}" if coll is None else self._coll_dir(db, coll)
         )
         fs.delete(path_cls(target), True)
+        self._evict(db, coll)
