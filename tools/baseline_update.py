@@ -127,6 +127,16 @@ RATIO_NOTES: dict[str, str] = {
         "projection-prune: the tokenize + md5 fingerprint is a "
         "map-only column count() never evaluates; sub-second absolute"
     ),
+    "simhash_fingerprint": (
+        "aggregate-prune: the per-term portable md5 hash and the 21 "
+        "packed per-bit sums are unreferenced under count(), which "
+        "keeps only the explode + groupBy; noop pays the hashing"
+    ),
+    "grouping_sets_agg": (
+        "aggregate-prune: the decimal price sum and grouping() flags "
+        "are unreferenced under count(), leaving the Expand + key-only "
+        "aggregate; sub-0.7 s absolute"
+    ),
     "pii_scrub": (
         "projection-prune: the three chained regexp_replace passes and "
         "regexp_count audit columns are map-only projections count() "
